@@ -39,6 +39,7 @@ from ..functions.textnorm import (py_cap_feature, py_tokenize_ws,
 from .crf import viterbi_decode
 from .encoder import TaggerWeights, neural_emissions
 from .tagset import ENTITY_TYPES, grammar_transitions, iobes_tags
+from .triples import lexicon_lookup
 
 MATCH_SCORE = 10.0
 
@@ -270,7 +271,10 @@ def tag_sentences(
     Everything heavy (weights / dictionaries) ships via
     ``sparkContext.broadcast`` once per job, not per task. Batch size is
     bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` (session
-    factory) — the explicit inference-stage sizing knob.
+    factory) — the explicit inference-stage sizing knob. In neural mode
+    the encoder itself length-sorts each batch's distinct sentences and
+    runs them in cache-sized chunks (``encoder.CHUNK_ROWS``), so padding
+    stays low whatever order the rows arrive in.
     """
     spark = sentences.sparkSession
     sc = spark.sparkContext
@@ -441,8 +445,9 @@ def pages_to_mention_pairs(
     in-sentence mention-pair generation (between-phrase included) — and
     emits narrow columns (no token arrays, no tag arrays cross back).
 
-    Downstream, mentions = explode(spans) and triples = explode(pairs)
-    ⨝ broadcast(lexicon): the whole pipeline has ZERO exchanges.
+    Downstream, mentions = the kind=0 rows and triples = the kind=1 rows
+    with a lexicon lookup on the between-phrase: the whole pipeline has
+    no join and ZERO exchanges.
     Same semantics as tag_sentences→mentions_table→sentence_local_triples
     (asserted equivalent in tests).
     """
@@ -599,10 +604,8 @@ def fused_triples(
     predicate_lexicon: dict[str, str],
     cooccurrence_window: int | None = None,
 ) -> DataFrame:
-    """explode(pairs) ⨝ broadcast(lexicon) → triples (zero exchanges)."""
-    spark = fused.sparkSession
-    lex = spark.createDataFrame(
-        sorted(predicate_lexicon.items()), "between string, pred string")
+    """pairs + lexicon lookup on the between-phrase → triples (no join,
+    zero exchanges)."""
     pairs = (
         fused.filter(F.col("kind") == 1)
         .select(
@@ -614,18 +617,18 @@ def fused_triples(
             F.col("surf_b").alias("obj_surface"),
             F.col("type_b").alias("obj_type"),
             F.col("c").alias("gap"),
-            "between",
+            lexicon_lookup(F.col("between"), predicate_lexicon).alias("pred"),
         )
     )
     out_cols = [
         "url", "sent_id", "subj_surface", "subj_type", "pred",
         "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
     ]
-    result = pairs.join(F.broadcast(lex), on="between", how="inner").select(*out_cols)
+    result = pairs.filter(F.col("pred").isNotNull()).select(*out_cols)
     if cooccurrence_window is not None:
         coocc = (
-            pairs.join(F.broadcast(lex), on="between", how="left_anti")
-            .filter(F.col("gap") <= cooccurrence_window)
+            pairs.filter(F.col("pred").isNull()
+                         & (F.col("gap") <= cooccurrence_window))
             .withColumn("pred", F.lit("cooccurs_with"))
             .select(*out_cols)
         )
@@ -637,11 +640,12 @@ def fused_triples(
 
 
 def repartition_by_length(sentences: DataFrame, partitions: int | None = None) -> DataFrame:
-    """O1 — sort-by-length batching (loader.py:239, eval.py:122): range-
-    partition on token count and sort within partitions so Arrow batches
-    hold similar-length sentences → minimal padding waste in the padded
-    [B, L] tensors. Purely physical; no semantic effect (the fused/
-    tagged outputs are row-keyed, never order-dependent)."""
+    """O1 — sort-by-length batching (loader.py:239, eval.py:122): hash-
+    partition on the token sequence and sort by token count within each
+    partition, so Arrow batches hold similar-length sentences and the
+    tagger's task-lifetime memo sees every copy of a repeated sentence.
+    Purely physical; no semantic effect (the fused/tagged outputs are
+    row-keyed, never order-dependent)."""
     n = partitions or sentences.sparkSession.sparkContext.defaultParallelism
     # hash-partition on the TOKEN SEQUENCE, then sort by length inside
     # each partition. This keeps the property the stage actually needs —

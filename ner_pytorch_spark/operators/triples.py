@@ -7,8 +7,8 @@ extractor is the pattern/co-occurrence path SURVEY §7 Phase 3 specifies:
 
 * mention pairs within a sentence (self-join on (url, sent_id), ordered,
   non-overlapping) — entirely JVM-side;
-* predicate = the token run BETWEEN the two mentions, matched against a
-  broadcast predicate lexicon (equi broadcast join, J5 shape);
+* predicate = the token run BETWEEN the two mentions, looked up in the
+  predicate lexicon as a literal map (:func:`lexicon_lookup`);
 * **verb-arc layer** (:func:`verb_arc_triples`) — a deterministic
   approximation of the reference's dependency arcs: a lexicon verb
   anywhere in the sentence links its NEAREST preceding mention (subject)
@@ -21,13 +21,27 @@ extractor is the pattern/co-occurrence path SURVEY §7 Phase 3 specifies:
 
 At 100 TB the self-join is per-sentence (key = (url, sent_id)) so it
 shuffles both sides on the same key once; mentions-per-sentence is tiny,
-so no pair explosion. The lexicon join is broadcast.
+so no pair explosion. The lexicon is a plan literal, so it costs no join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def lexicon_lookup(key: Column, lexicon: dict[str, str]) -> Column:
+    """``lexicon[key]``, or null when ``key`` is absent (or null).
+
+    The lexicon is a few rows with unique keys, so a literal map in the
+    plan replaces a broadcast equi-join: an inner join keeps the rows
+    whose lookup is non-null, a left_anti join the rows whose lookup is
+    null. No extra job builds a build side and no exchange ships it.
+    """
+    if not lexicon:
+        return F.lit(None).cast("string")
+    return F.element_at(F.create_map(*[
+        F.lit(x) for kv in sorted(lexicon.items()) for x in kv]), key)
 
 
 def sentence_local_triples(
@@ -40,15 +54,11 @@ def sentence_local_triples(
 
     Mention pairs are intra-sentence, so no self-join is needed at all:
     spans are computed on the tagged row, pair-exploded WITHIN the row,
-    and the only join is the broadcast predicate lexicon. The physical
-    plan is scan → UDF → explode → explode → filter → broadcast-join —
-    zero exchanges.
+    and the predicate is a lexicon lookup. The physical plan is scan →
+    UDF → explode → explode → filter → project — no join, zero exchanges.
     """
     from .spans import extract_spans_udf
 
-    spark = tagged.sparkSession
-    lex = spark.createDataFrame(
-        sorted(predicate_lexicon.items()), "between string, pred string")
     sp = tagged.withColumn(
         "spans", extract_spans_udf(F.col("pred_tags"), F.col("tokens")))
     pairs = (
@@ -74,7 +84,9 @@ def sentence_local_triples(
         "url", "sent_id", "subj_surface", "subj_type", "pred",
         "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
     ]
-    result = pairs.join(F.broadcast(lex), on="between", how="inner").select(*out_cols)
+    result = (pairs.withColumn("pred", lexicon_lookup(F.col("between"),
+                                                      predicate_lexicon))
+              .filter(F.col("pred").isNotNull()).select(*out_cols))
     if verb_lexicon:
         result = _layer_verb_arcs(result, tagged, verb_lexicon, out_cols)
     if cooccurrence_window is not None:
@@ -112,16 +124,13 @@ def verb_arc_triples(tagged: DataFrame,
     nearest before the verb, object = the mention whose START is nearest
     after. All resolution happens INSIDE the row with higher-order array
     functions (filter/transform/array_max) — the physical plan is
-    scan → spans UDF → posexplode → broadcast verb join → project,
-    no window, no shuffle.
+    scan → spans UDF → posexplode → verb lookup filter → project,
+    no join, no window, no shuffle.
 
     ``verb_lexicon``: verb token → predicate name.
     """
     from .spans import extract_spans_udf
 
-    spark = tagged.sparkSession
-    vlex = spark.createDataFrame(
-        sorted(verb_lexicon.items()), "verb string, pred string")
     # NOTE: field aliases on HOF lambda variables don't stick (Spark
     # names them y_N), so the struct is cast to an explicit schema
     spans_i = F.transform(
@@ -133,7 +142,8 @@ def verb_arc_triples(tagged: DataFrame,
     verbs = (
         tagged.select("url", "sent_id", spans_i.alias("spans"),
                       F.posexplode("tokens").alias("pos", "verb"))
-        .join(F.broadcast(vlex), on="verb")
+        .withColumn("pred", lexicon_lookup(F.col("verb"), verb_lexicon))
+        .filter(F.col("pred").isNotNull())
         # a verb token inside a mention span is part of the entity name
         .filter(~F.exists(
             "spans", lambda m: (m["start"] <= F.col("pos"))
@@ -190,10 +200,10 @@ def parsed_arc_triples(parsed: DataFrame,
     'VERB'`` token, subject mentions are the mentions containing a
     ``subj_rels`` dependent of the verb, objects those containing an
     ``obj_rels`` dependent; the predicate is the verb's lexicon mapping
-    (broadcast join) or its lowercased form. All arc/mention resolution
+    (keys lowercased) or its lowercased form. All arc/mention resolution
     is row-local higher-order-function work — the physical plan is
-    scan → spans UDF → posexplode → (broadcast join) → explode ×2 →
-    project, zero exchanges, same 100 TB shape as the fallback path.
+    scan → spans UDF → posexplode → explode ×2 → project, zero joins and
+    zero exchanges, same 100 TB shape as the fallback path.
 
     ``conj_propagate=True`` adds the conjunction distribution the
     reference's tree walk gets by linearizing whole subtrees
@@ -233,14 +243,9 @@ def parsed_arc_triples(parsed: DataFrame,
             F.col("arc.deprel").alias("verb_deprel"),
             F.lower(F.element_at("tokens", F.col("arc.id"))).alias("verb"))
     )
-    if verb_lexicon:
-        vlex = parsed.sparkSession.createDataFrame(
-            sorted((k.lower(), v) for k, v in verb_lexicon.items()),
-            "verb string, lex_pred string")
-        verbs = (verbs.join(F.broadcast(vlex), on="verb", how="left")
-                 .withColumn("pred", F.coalesce("lex_pred", "verb")))
-    else:
-        verbs = verbs.withColumn("pred", F.col("verb"))
+    lex = {k.lower(): v for k, v in sorted((verb_lexicon or {}).items())}
+    verbs = verbs.withColumn(
+        "pred", F.coalesce(lexicon_lookup(F.col("verb"), lex), F.col("verb")))
 
     def raw_deps(rels: tuple[str, ...], head_col):
         return F.filter(
@@ -364,16 +369,15 @@ def extract_triples(
     """→ (url, sent_id, subj_surface, subj_type, pred, obj_surface,
     obj_type, subj_mention_id, obj_mention_id).
 
-    Pattern triples via broadcast lexicon equi-join on the between-phrase;
-    optional verb-arc layer (``verb_lexicon``) for predicates the exact
+    Pattern triples via a lexicon lookup on the between-phrase; optional
+    verb-arc layer (``verb_lexicon``) for predicates the exact
     between-match misses; optional windowed co-occurrence fallback for
     unmatched pairs.
     """
-    spark = mentions.sparkSession
-    lex = spark.createDataFrame(
-        sorted(predicate_lexicon.items()), "between string, pred string")
     pairs = mention_pairs(mentions, tagged)
-    pattern = pairs.join(F.broadcast(lex), on="between", how="inner")
+    pattern = (pairs.withColumn("pred", lexicon_lookup(F.col("between"),
+                                                       predicate_lexicon))
+               .filter(F.col("pred").isNotNull()))
     out_cols = [
         "url", "sent_id", "subj_surface", "subj_type", "pred",
         "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",

@@ -153,8 +153,9 @@ class KGPipeline(SnapshotStagedPlan):
             "sentences", resume,
             lambda: sentences_table(salted_repartition(pages, salt=self.salt)))
         # neural inference pays per-batch padding to the longest sentence;
-        # range-partition + sort by token count first (O1) so Arrow
-        # batches hold similar lengths — purely physical, row-keyed
+        # hash-partition on the tokens + sort by token count within each
+        # partition first (O1) so Arrow batches hold similar lengths and
+        # repeats share a task's memo — purely physical, row-keyed
         # outputs are order-independent
         tag_in = (repartition_by_length(sents) if self.mode == "neural"
                   else sents)

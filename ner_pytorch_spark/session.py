@@ -6,13 +6,73 @@ what we would ship to a multi-executor cluster via ``spark-submit
 partition coalescing), Arrow for the pandas-UDF inference stage, and a
 shuffle-partition count sized to the core count rather than the 200
 default.
+
+This module imports neither pyspark nor numpy at load time, so a script
+can call :func:`pin_blas` before numpy (and with it OpenBLAS) loads.
 """
 
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
+
+# OpenBLAS kernel family per CPU feature set, best first. numpy's bundled
+# OpenBLAS falls back to its generic SSE3 ("Prescott") kernels on CPUs its
+# model table does not know, at about a fifth of the sgemm rate the
+# AVX2/AVX-512 kernels reach; OPENBLAS_CORETYPE names the family instead.
+_CORETYPES = ((("avx512f",), "SkylakeX"), (("avx2", "fma"), "Haswell"))
+
+
+def _openblas_coretype() -> str | None:
+    """The OpenBLAS core this CPU's feature flags support, or None."""
+    try:
+        with open("/proc/cpuinfo") as fh:
+            flags = next((set(line.split(":", 1)[1].split()) for line in fh
+                          if line.startswith("flags")), set())
+    except OSError:
+        return None
+    return next((core for need, core in _CORETYPES
+                 if flags.issuperset(need)), None)
+
+
+def pin_blas() -> None:
+    """Per-process BLAS settings, as ``setdefault``s on the environment.
+
+    Takes effect in processes that load OpenBLAS after the call: the
+    Python workers of a ``local[N]`` session started afterwards, or this
+    process if numpy is not imported yet.
+    """
+    # One BLAS thread per python worker: N workers × M BLAS threads
+    # oversubscribes the box and DESTROYS scaling of the UDF stage.
+    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
+                "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
+        os.environ.setdefault(var, "1")
+    core = _openblas_coretype()
+    if core is not None:
+        os.environ.setdefault("OPENBLAS_CORETYPE", core)
+
+
+def openblas_core() -> str | None:
+    """The kernel core numpy's OpenBLAS runs on (e.g. ``"SkylakeX"``), or
+    None when no OpenBLAS core-name symbol can be resolved."""
+    import ctypes
+    import glob
+
+    import numpy as np
+
+    libdir = os.path.join(os.path.dirname(np.__file__), os.pardir,
+                          "numpy.libs")
+    for path in glob.glob(os.path.join(libdir, "libopenblas*")):
+        lib = ctypes.CDLL(path)
+        for sym in ("openblas_get_corename64_", "openblas_get_corename"):
+            fn = getattr(lib, sym, None)
+            if fn is not None:
+                fn.argtypes, fn.restype = [], ctypes.c_char_p
+                return fn().decode()
+    return None
 
 
 def get_spark(
@@ -28,11 +88,10 @@ def get_spark(
     at cluster scale this would instead be sized from input bytes /
     target partition size; AQE coalesces the excess either way.
     """
-    # One BLAS thread per python worker: N workers × M BLAS threads
-    # oversubscribes the box and DESTROYS scaling of the UDF stage.
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",
-                "NUMEXPR_NUM_THREADS", "VECLIB_MAXIMUM_THREADS"):
-        os.environ.setdefault(var, "1")
+    from pyspark.sql import SparkSession
+
+    # before the JVM starts, so the Python workers inherit it
+    pin_blas()
 
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

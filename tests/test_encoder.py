@@ -1,11 +1,18 @@
 """Numpy encoder forward: masking, OOV-drop guards, neural tagger e2e."""
 
-import numpy as np
+import os
 
-from ner_pytorch_spark.operators.encoder import (TaggerWeights, char_bilstm,
+import numpy as np
+import pytest
+
+from ner_pytorch_spark.operators.encoder import (CHUNK_ROWS, TaggerWeights,
+                                                 _emissions, char_bilstm,
                                                  char_cnn, lstm_forward,
                                                  neural_emissions)
 from ner_pytorch_spark.operators.tagset import iobes_tags
+
+CKPT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                    "artifacts", "conll_weights.npz")
 
 
 def _lstm_params(rng, in_dim, h):
@@ -75,6 +82,37 @@ def test_neural_emissions_shapes_and_decode():
     # deterministic: same inputs → identical emissions
     em2, _ = neural_emissions(w, word_ids, char_ids, caps)
     np.testing.assert_array_equal(em, em2)
+
+
+@pytest.mark.parametrize("n_rows", [CHUNK_ROWS, CHUNK_ROWS + 77])
+def test_chunked_emissions_match_single_sentences(n_rows):
+    """Batches over CHUNK_ROWS run as length-sorted chunks: every row's
+    real positions match a one-sentence forward, padding matches one
+    unchunked pass, and Viterbi decodes the same paths."""
+    from ner_pytorch_spark.operators.crf import viterbi_decode
+
+    w = TaggerWeights.from_npz(CKPT)
+    rng = np.random.default_rng(17)
+    V, C = w.word_emb.shape[0], w.char_emb.shape[0]
+    lens = rng.permutation(np.arange(n_rows) % 40 + 1)   # shuffled 1..40
+    word_ids = [rng.integers(0, V, n).tolist() for n in lens]
+    char_ids = [[rng.integers(0, C, rng.integers(0, 9)).tolist()
+                 for _ in range(n)] for n in lens]
+    caps = [rng.integers(0, 4, n).tolist() for n in lens]
+
+    # float32 forward; chunk shapes change BLAS blocking, not the math
+    tol = dict(rtol=1e-5, atol=1e-5)
+    em, got_lens = neural_emissions(w, word_ids, char_ids, caps)
+    assert em.shape == (n_rows, 40, w.num_tags)
+    assert got_lens.tolist() == lens.tolist()
+    whole, _ = _emissions(w, word_ids, char_ids, caps)
+    np.testing.assert_allclose(em, whole, **tol)
+    paths = viterbi_decode(em, got_lens, w.transitions)
+    for b, n in enumerate(lens):
+        one, one_len = neural_emissions(w, [word_ids[b]], [char_ids[b]],
+                                        [caps[b]])
+        np.testing.assert_allclose(em[b, :n], one[0], **tol)
+        assert viterbi_decode(one, one_len, w.transitions)[0] == paths[b]
 
 
 def test_neural_tagger_spark_e2e(spark):

@@ -3,7 +3,9 @@
 Reproduces exactly what one Arrow batch of the neural tag_sentences stage
 does — featurize → neural_emissions → viterbi_decode — on the same
 synthetic sentences the bench generates, WITHOUT Spark, so cProfile and
-per-phase timers see the pure compute cost.
+per-phase timers see the pure compute cost. The session factory's BLAS
+pin (one thread, OPENBLAS_CORETYPE from the CPU flags) is applied before
+numpy loads, so the kernels are the ones the Python workers run.
 
 Usage: python tools/profile_neural.py [n_pages] [batch_size]
 """
@@ -16,10 +18,12 @@ import pstats
 import sys
 import time
 
-import numpy as np
-
 sys.path.insert(0, __import__("os").path.dirname(
     __import__("os").path.dirname(__import__("os").path.abspath(__file__))))
+
+from ner_pytorch_spark.session import openblas_core, pin_blas
+
+pin_blas()   # before numpy (and OpenBLAS) loads
 
 from ner_pytorch_spark import datagen
 from ner_pytorch_spark.operators.crf import viterbi_decode
@@ -31,6 +35,7 @@ from ner_pytorch_spark.operators.tagset import ENTITY_TYPES, iobes_tags
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     batch = int(sys.argv[2]) if len(sys.argv) > 2 else 256
+    print(f"OpenBLAS core: {openblas_core()}")
 
     # ---- sentences, as sentences_table would produce them
     t0 = time.time()
