@@ -365,13 +365,14 @@ def hidden_features(
     return np.concatenate([h_f, h_b], axis=2), lengths  # [B, L, 2H]
 
 
-# Rows per forward pass in neural_emissions. Larger batches are length-
-# sorted and cut into chunks of this many rows: each chunk pads only to
+# Rows per forward pass in neural_emissions. Each batch is length-sorted
+# and cut into chunks of at most this many rows: each chunk pads only to
 # its own longest sentence, and one LSTM step's [rows, 4H] gate block
 # (128 × 800 float32 = 400 KB at H=200) stays in L2. Chosen from a sweep
-# of 64..1024 rows on 1,800-sentence batches: 128-256 tie on short
-# synthetic sentences, and 128 is 12% faster than 256 on CoNLL-like
-# long-tailed lengths (see CHANGES.md).
+# of 64..1024 rows on the benchmark's 1,772-sentence fused batch (mean
+# 7.2 tokens, one thread, AVX-512 kernels): 128-384 tie within noise, 64
+# and >= 512 are slower; 128 is the smallest of the tied sizes. Re-check
+# on real CoNLL sentence lengths, which are longer and long-tailed.
 CHUNK_ROWS = 128
 
 
@@ -401,17 +402,16 @@ def neural_emissions(
 
     Returns (emissions [B, L, num_tags], lengths [B]) in the caller's row
     order. START/STOP columns of the projection are forced IMPOSSIBLE so
-    decode never emits them. Batches of more than ``CHUNK_ROWS`` rows run
-    as length-sorted chunks; padding positions hold the projection of a
-    zero hidden state either way, as in one pass over the whole batch.
+    decode never emits them. The rows run as length-sorted chunks of at
+    most ``CHUNK_ROWS``; padding positions hold the projection of a zero
+    hidden state, as in one pass over the whole batch.
     """
     B = len(word_ids)
-    if B <= CHUNK_ROWS:
-        return _emissions(weights, word_ids, char_ids, cap_ids)
     lengths = np.fromiter((len(s) for s in word_ids), np.int64, B)
     order = np.argsort(-lengths, kind="stable")
     T = weights.num_tags
-    em = np.empty((B, max(1, int(lengths.max())), T), dtype=np.float32)
+    em = np.empty((B, max(1, int(lengths.max(initial=0))), T),
+                  dtype=np.float32)
     em[:] = weights.proj_b[:T]
     for start in range(0, B, CHUNK_ROWS):
         rows = order[start:start + CHUNK_ROWS]

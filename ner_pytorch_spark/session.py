@@ -55,26 +55,6 @@ def pin_blas() -> None:
         os.environ.setdefault("OPENBLAS_CORETYPE", core)
 
 
-def openblas_core() -> str | None:
-    """The kernel core numpy's OpenBLAS runs on (e.g. ``"SkylakeX"``), or
-    None when no OpenBLAS core-name symbol can be resolved."""
-    import ctypes
-    import glob
-
-    import numpy as np
-
-    libdir = os.path.join(os.path.dirname(np.__file__), os.pardir,
-                          "numpy.libs")
-    for path in glob.glob(os.path.join(libdir, "libopenblas*")):
-        lib = ctypes.CDLL(path)
-        for sym in ("openblas_get_corename64_", "openblas_get_corename"):
-            fn = getattr(lib, sym, None)
-            if fn is not None:
-                fn.argtypes, fn.restype = [], ctypes.c_char_p
-                return fn().decode()
-    return None
-
-
 def get_spark(
     app_name: str = "ner_pytorch_spark",
     cores: int | None = None,

@@ -86,9 +86,10 @@ def test_neural_emissions_shapes_and_decode():
 
 @pytest.mark.parametrize("n_rows", [CHUNK_ROWS, CHUNK_ROWS + 77])
 def test_chunked_emissions_match_single_sentences(n_rows):
-    """Batches over CHUNK_ROWS run as length-sorted chunks: every row's
-    real positions match a one-sentence forward, padding matches one
-    unchunked pass, and Viterbi decodes the same paths."""
+    """Batches run as length-sorted chunks of at most CHUNK_ROWS rows,
+    one chunk or several: every row's real positions match a one-sentence
+    forward, padding matches one unsorted pass over the whole batch, and
+    Viterbi decodes the same paths."""
     from ner_pytorch_spark.operators.crf import viterbi_decode
 
     w = TaggerWeights.from_npz(CKPT)

@@ -1,10 +1,11 @@
-"""Session factory: the OpenBLAS core pin reaches the Python workers."""
+"""Session factory: the OpenBLAS core pin and its reach into the Python
+workers of a ``local[N]`` session."""
 
 import os
 
 import pytest
 
-from ner_pytorch_spark.session import get_spark
+from ner_pytorch_spark.session import pin_blas
 
 # OpenBLAS core names without AVX2 kernels
 PRE_AVX2_CORES = {
@@ -28,22 +29,17 @@ def _expected_coretype() -> str | None:
     return None
 
 
-def _get_spark():
-    # same arguments as the suite's session: getOrCreate returns it
-    return get_spark(app_name="tests", cores=8, shuffle_partitions=8)
-
-
-def test_preset_coretype_wins(spark, monkeypatch):
+def test_preset_coretype_wins(monkeypatch):
     monkeypatch.setenv("OPENBLAS_CORETYPE", "Prescott")
-    _get_spark()
+    pin_blas()
     assert os.environ["OPENBLAS_CORETYPE"] == "Prescott"
 
 
 @pytest.mark.skipif(not os.path.exists("/proc/cpuinfo"),
                     reason="CPU flags are read from /proc/cpuinfo")
-def test_coretype_matches_numpy_cpu_features(spark, monkeypatch):
+def test_coretype_matches_numpy_cpu_features(monkeypatch):
     monkeypatch.delenv("OPENBLAS_CORETYPE", raising=False)
-    _get_spark()
+    pin_blas()
     assert os.environ.get("OPENBLAS_CORETYPE") == _expected_coretype()
 
 
@@ -51,7 +47,7 @@ def test_workers_inherit_coretype(spark):
     def probe(batches):
         import pandas as pd
 
-        from ner_pytorch_spark.session import openblas_core
+        from tools.blas_core import openblas_core
         for _ in batches:
             yield pd.DataFrame({
                 "coretype": [os.environ.get("OPENBLAS_CORETYPE")],

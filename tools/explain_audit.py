@@ -142,6 +142,7 @@ def main():
     # verb lexicon is a literal-map lookup, never a join
     plan = plan_of(e.q_kg_triples_parsed(spark, SF))
     ok &= check("parsed_arc_no_join", plan,
+                must=[r"element_at\(map\("],
                 must_not=[r"Join", r"CartesianProduct"])
 
     # corpus-wide KMV: the two-level k-minima merge leaves no global

@@ -21,9 +21,11 @@ import time
 sys.path.insert(0, __import__("os").path.dirname(
     __import__("os").path.dirname(__import__("os").path.abspath(__file__))))
 
-from ner_pytorch_spark.session import openblas_core, pin_blas
+from ner_pytorch_spark.session import pin_blas
 
 pin_blas()   # before numpy (and OpenBLAS) loads
+
+from blas_core import openblas_core  # noqa: E402  (tools/, script dir)
 
 from ner_pytorch_spark import datagen
 from ner_pytorch_spark.operators.crf import viterbi_decode
