@@ -25,29 +25,29 @@ Featurization parity contracts (unit-tested):
 
 from __future__ import annotations
 
-from typing import Iterator
+import re
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from ..functions.textnorm import (py_cap_feature, py_tokenize_ws,
                                   py_zero_digits, tokenize_ws)
-from .crf import viterbi_decode
+from .crf import IMPOSSIBLE, viterbi_decode
 from .encoder import TaggerWeights, neural_emissions
+from .spans import extract_spans
 from .tagset import ENTITY_TYPES, grammar_transitions, iobes_tags
-from .triples import lexicon_lookup
+from .triples import TRIPLE_COLS, lexicon_lookup
 
 MATCH_SCORE = 10.0
 
 # ASCII file/group/record/unit separators: str.split() whitespace but
 # NOT Java-\s whitespace — pages containing them can't use the fast path
-import re as _re
-
-_FS_SEPS = _re.compile("[\x1c-\x1f]")
+_FS_SEPS = re.compile("[\x1c-\x1f]")
 
 
 # ------------------------------------------------------------ sentences
@@ -70,6 +70,21 @@ def sentences_table(pages: DataFrame, lang: str | None = "en") -> DataFrame:
         .withColumn("tokens", tokenize_ws(F.col("sentence")))
         .filter(F.size("tokens") > 0)
     )
+
+
+def page_sentences(text: str) -> Iterator[tuple[int, list[str]]]:
+    """Python twin of :func:`sentences_table` for one page's text:
+    ``(sent_id, tokens)`` for every line with at least one token."""
+    # tokenization contract = JVM \s+ ([ \t\n\x0B\f\r]). On plain-ASCII
+    # text str.split() is identical and ~3x faster (the hot path) —
+    # EXCEPT the ASCII separators \x1c-\x1f, which str.split() treats as
+    # whitespace and Java \s does not, so those pages (and non-ASCII
+    # ones, U+00A0 etc.) take the pinned ASCII-class regex.
+    fast = text.isascii() and _FS_SEPS.search(text) is None
+    for sent_id, line in enumerate(text.split("\n")):
+        toks = line.split() if fast else py_tokenize_ws(line)
+        if toks:
+            yield sent_id, toks
 
 
 # ------------------------------------------------------- featurization
@@ -168,8 +183,6 @@ def gazetteer_decode(
     Skipping the DP also skips materializing the [B, L, T] emission
     tensor — on profile this halves the fused UDF body.
     """
-    from .crf import IMPOSSIBLE, viterbi_decode
-
     T = transitions.shape[0] - 2
     half = IMPOSSIBLE / 2.0
     ok_pair = transitions[:T, :T] > half
@@ -189,14 +202,7 @@ def gazetteer_decode(
         else:
             fallback.append((b, g))
     if fallback:
-        L = max(g.size for _, g in fallback)
-        em = np.zeros((len(fallback), L, T), dtype=np.float32)
-        lens = np.asarray([g.size for _, g in fallback], dtype=np.int64)
-        for k, (_, g) in enumerate(fallback):
-            em[k, np.arange(g.size), g] = MATCH_SCORE
-        for (b, _), p in zip(fallback,
-                             viterbi_decode(em, lens, transitions)):
-            paths[b] = p
+        _viterbi_into(paths, fallback, transitions)
     return paths
 
 
@@ -208,28 +214,32 @@ def gazetteer_viterbi(
 ) -> list[list[int]]:
     """Gazetteer decode through the FULL Viterbi DP (no shortcut).
 
-    Semantically identical to :func:`gazetteer_decode` (differentially
-    tested); exists so the DP-free win is measurable from the bench
-    artifact (``bench.py`` times the fused path both ways) rather than
-    only claimed in prose.
+    Semantically identical to :func:`gazetteer_decode`. ``tag_sentences``
+    decodes with it, so the fused==staged equivalence tests verify the
+    shortcut against the DP; ``bench.py`` times the fused path both ways.
     """
-    from .crf import viterbi_decode
-
-    T = transitions.shape[0] - 2
     nonempty = [(b, np.asarray(
         gazetteer_tag_ids(toks, surface_index, tag_ids), dtype=np.int64))
         for b, toks in enumerate(tok_lists) if toks]
     paths: list[list[int]] = [[] for _ in tok_lists]
     if nonempty:
-        L = max(g.size for _, g in nonempty)
-        em = np.zeros((len(nonempty), L, T), dtype=np.float32)
-        lens = np.asarray([g.size for _, g in nonempty], dtype=np.int64)
-        for k, (_, g) in enumerate(nonempty):
-            em[k, np.arange(g.size), g] = MATCH_SCORE
-        for (b, _), p in zip(nonempty,
-                             viterbi_decode(em, lens, transitions)):
-            paths[b] = p
+        _viterbi_into(paths, nonempty, transitions)
     return paths
+
+
+def _viterbi_into(paths: list, matched: list[tuple[int, np.ndarray]],
+                  transitions: np.ndarray) -> None:
+    """Viterbi DP over the gazetteer emission lattices (MATCH_SCORE at
+    each row's matched tag ids, 0 elsewhere) of the non-empty
+    ``matched`` (row, tag ids) pairs; ``paths[row]`` = the decode."""
+    T = transitions.shape[0] - 2
+    L = max(g.size for _, g in matched)
+    em = np.zeros((len(matched), L, T), dtype=np.float32)
+    lens = np.asarray([g.size for _, g in matched], dtype=np.int64)
+    for k, (_, g) in enumerate(matched):
+        em[k, np.arange(g.size), g] = MATCH_SCORE
+    for (b, _), p in zip(matched, viterbi_decode(em, lens, transitions)):
+        paths[b] = p
 
 
 # ------------------------------------------------------------- tagging
@@ -256,6 +266,76 @@ def _decode_transitions(weights: TaggerWeights, grammar_prior: bool | None,
     return weights.transitions + prior if grammar_prior else weights.transitions
 
 
+def _tagger_payload(
+    mode: str, entity_types: tuple[str, ...], aliases: list[dict] | None,
+    weights: TaggerWeights | None, vocab: dict | None,
+    char_vocab: dict | None, grammar_prior: bool | None,
+) -> dict:
+    """Validate one tagging mode's inputs → the broadcast payload that
+    :func:`_decode_tags` reads on the workers."""
+    tags = iobes_tags(entity_types)
+    payload: dict = {
+        "mode": mode, "tags": tags,
+        "tag_ids": {t: i for i, t in enumerate(tags)},
+        "transitions": grammar_transitions(entity_types),
+    }
+    if mode == "gazetteer":
+        if aliases is None:
+            raise ValueError("gazetteer mode needs aliases")
+        payload["surface_index"] = build_surface_index(aliases)
+    elif mode == "neural":
+        if weights is None or vocab is None or char_vocab is None:
+            raise ValueError("neural mode needs weights + vocabs")
+        payload.update(
+            weights=weights, vocab=vocab, chars=char_vocab,
+            unk=vocab.get("<UNK>", 0),
+            decode_trans=_decode_transitions(
+                weights, grammar_prior, payload["transitions"]))
+    else:
+        raise ValueError(f"unknown mode {mode!r}")
+    return payload
+
+
+def _decode_tags(v: dict, tok_lists: list[tuple[str, ...]],
+                 dp_free: bool) -> list[list[str]]:
+    """Distinct token sequences → their decoded IOBES tag paths.
+
+    Neural mode: featurize → BiLSTM emissions → CRF Viterbi. Gazetteer
+    mode: the exact DP-free :func:`gazetteer_decode` when ``dp_free``,
+    else the full DP of :func:`gazetteer_viterbi`.
+    """
+    if v["mode"] == "gazetteer":
+        decode = gazetteer_decode if dp_free else gazetteer_viterbi
+        paths = decode(tok_lists, v["surface_index"], v["tag_ids"],
+                       v["transitions"])
+    else:
+        feats = [featurize_sentence(t, v["vocab"], v["chars"], v["unk"])
+                 for t in tok_lists]
+        em, lens = neural_emissions(
+            v["weights"], [f[0] for f in feats], [f[1] for f in feats],
+            [f[2] for f in feats])
+        paths = viterbi_decode(em, lens, v["decode_trans"])
+    tlist = v["tags"]
+    return [[tlist[i] for i in p] for p in paths]
+
+
+def _memoized(memo: dict, keys: list[tuple],
+              build: Callable[[list[tuple]], list]) -> list:
+    """The values of ``keys`` (token sequences), through a task-lifetime
+    memo: ``build`` maps the distinct keys the memo lacks to their values
+    in ONE batched call. Decoding is a pure function of the token sequence and
+    corpora repeat sentences heavily (boilerplate; the synthetic corpus
+    is ~15% unique), so each distinct sentence is decoded once per task.
+    The memo is bounded; it is rebuilt from the input on every run and
+    nothing survives the task.
+    """
+    todo = dict.fromkeys(k for k in keys if k not in memo)
+    overflow: dict = {}
+    for k, val in zip(todo, build(list(todo)) if todo else ()):
+        (memo if len(memo) < 1_000_000 else overflow)[k] = val
+    return [memo[k] if k in memo else overflow[k] for k in keys]
+
+
 def tag_sentences(
     sentences: DataFrame,
     mode: str = "gazetteer",
@@ -274,128 +354,28 @@ def tag_sentences(
     factory) — the explicit inference-stage sizing knob. In neural mode
     the encoder itself length-sorts each batch's distinct sentences and
     runs them in cache-sized chunks (``encoder.CHUNK_ROWS``), so padding
-    stays low whatever order the rows arrive in.
+    stays low whatever order the rows arrive in. Gazetteer mode always
+    runs the full Viterbi DP: it is the reference the fused path's
+    DP-free shortcut is tested against.
     """
-    spark = sentences.sparkSession
-    sc = spark.sparkContext
-    tags = iobes_tags(entity_types)
-    tag_ids = {t: i for i, t in enumerate(tags)}
-    transitions = grammar_transitions(entity_types)
+    bc = sentences.sparkSession.sparkContext.broadcast(_tagger_payload(
+        mode, entity_types, aliases, weights, vocab, char_vocab,
+        grammar_prior))
 
-    if mode == "gazetteer":
-        if aliases is None:
-            raise ValueError("gazetteer mode needs aliases")
-        bc = sc.broadcast({
-            "surface_index": build_surface_index(aliases),
-            "tag_ids": tag_ids, "tags": tags, "transitions": transitions,
-        })
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            v = bc.value
-            sidx, tids, tlist, trans = (
-                v["surface_index"], v["tag_ids"], v["tags"], v["transitions"])
-            T = len(tlist)
-            # task-lifetime memo (pure function of the token sequence;
-            # same rationale as the neural branch below)
-            memo: dict[tuple, list] = {}
-            for pdf in batches:
-                tok_lists = [list(t) for t in pdf["tokens"]]
-                B = len(tok_lists)
-                if B == 0:
-                    continue
-                lengths = np.array([len(t) for t in tok_lists], dtype=np.int64)
-                pred: list = [None] * B
-                todo: dict[tuple, list[int]] = {}
-                for i, toks in enumerate(tok_lists):
-                    key = tuple(toks)
-                    hit = memo.get(key)
-                    if hit is not None:
-                        pred[i] = hit
-                    else:
-                        todo.setdefault(key, []).append(i)
-                if todo:
-                    uniq = [tok_lists[ix[0]] for ix in todo.values()]
-                    lens_u = np.fromiter((len(t) for t in uniq), np.int64,
-                                         len(uniq))
-                    L = max(1, int(lens_u.max()))
-                    em = np.zeros((len(uniq), L, T), dtype=np.float32)
-                    for b, toks in enumerate(uniq):
-                        gold = gazetteer_tag_ids(toks, sidx, tids)
-                        em[b, np.arange(len(gold)), gold] = MATCH_SCORE
-                    paths = viterbi_decode(em, lens_u, trans)
-                    for key, p in zip(todo, paths):
-                        tags_p = [tlist[i] for i in p]
-                        if len(memo) < 1_000_000:
-                            memo[key] = tags_p
-                        for i in todo[key]:
-                            pred[i] = tags_p
-                yield pd.DataFrame({
-                    "url": pdf["url"], "sent_id": pdf["sent_id"],
-                    "tokens": pdf["tokens"], "pred_tags": pred,
-                    "n_tokens": lengths,
-                })
-
-    elif mode == "neural":
-        if weights is None or vocab is None or char_vocab is None:
-            raise ValueError("neural mode needs weights + vocabs")
-        unk_id = vocab.get("<UNK>", 0)
-        bc = sc.broadcast({
-            "weights": weights, "vocab": vocab, "chars": char_vocab,
-            "unk": unk_id, "tags": tags,
-            "decode_trans": _decode_transitions(weights, grammar_prior,
-                                                transitions),
-        })
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            v = bc.value
-            w: TaggerWeights = v["weights"]
-            tlist = v["tags"]
-            # task-lifetime memo: featurize→forward→Viterbi is a pure
-            # function of the token sequence, and real corpora repeat
-            # sentences heavily (boilerplate; the synthetic corpus is
-            # ~15% unique) — with length-clustered partitions the copies
-            # of a sentence land in the SAME task, so the forward runs
-            # once per distinct sentence per task. Recomputed from the
-            # parquet input on every run — nothing survives the task.
-            memo: dict[tuple, list] = {}
-            for pdf in batches:
-                tok_lists = [list(t) for t in pdf["tokens"]]
-                if not tok_lists:
-                    continue
-                B = len(tok_lists)
-                lengths = np.fromiter((len(t) for t in tok_lists),
-                                      np.int64, B)
-                pred: list = [None] * B
-                todo: dict[tuple, list[int]] = {}
-                for i, toks in enumerate(tok_lists):
-                    key = tuple(toks)
-                    hit = memo.get(key)
-                    if hit is not None:
-                        pred[i] = hit
-                    else:
-                        todo.setdefault(key, []).append(i)
-                if todo:
-                    uniq = [tok_lists[ix[0]] for ix in todo.values()]
-                    feats = [featurize_sentence(t, v["vocab"], v["chars"],
-                                                v["unk"]) for t in uniq]
-                    em, lens_u = neural_emissions(
-                        w, [f[0] for f in feats], [f[1] for f in feats],
-                        [f[2] for f in feats])
-                    paths = viterbi_decode(em, lens_u, v["decode_trans"])
-                    for key, p in zip(todo, paths):
-                        tags_p = [tlist[i] for i in p]
-                        if len(memo) < 1_000_000:   # bound task memory
-                            memo[key] = tags_p
-                        for i in todo[key]:
-                            pred[i] = tags_p
-                yield pd.DataFrame({
-                    "url": pdf["url"], "sent_id": pdf["sent_id"],
-                    "tokens": pdf["tokens"], "pred_tags": pred,
-                    "n_tokens": lengths,
-                })
-
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        v = bc.value
+        memo: dict[tuple, list[str]] = {}
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            keys = [tuple(t) for t in pdf["tokens"]]
+            pred = _memoized(memo, keys,
+                             lambda ks: _decode_tags(v, ks, dp_free=False))
+            yield pd.DataFrame({
+                "url": pdf["url"], "sent_id": pdf["sent_id"],
+                "tokens": pdf["tokens"], "pred_tags": pred,
+                "n_tokens": np.fromiter(map(len, keys), np.int64, len(keys)),
+            })
 
     return sentences.select("url", "sent_id", "tokens").mapInPandas(run, _TAGGED_SCHEMA)
 
@@ -420,6 +400,27 @@ _FUSED_SCHEMA = StructType([
     StructField("surf_b", StringType()),    # -          | obj_surface
     StructField("between", StringType()),   # -          | between phrase
 ])
+
+
+def _sentence_template(toks: tuple[str, ...], tags: list[str]) -> tuple:
+    """One decoded sentence → its (mentions, pairs) rows without the
+    (url, sent_id) key: BIOES spans, then every ordered non-overlapping
+    in-sentence mention pair with the token run between the two."""
+    spans = extract_spans(tags, toks)
+    ments = [(mid, s["start"], s["end"], s["tag_type"], s["surface"])
+             for mid, s in enumerate(spans)]
+    prs = []
+    for i, m1 in enumerate(spans):
+        for j in range(i + 1, len(spans)):
+            m2 = spans[j]
+            if m1["end"] > m2["start"]:
+                continue
+            prs.append((
+                i, j, m2["start"] - m1["end"],
+                m1["tag_type"], m2["tag_type"],
+                m1["surface"], m2["surface"],
+                " ".join(toks[m1["end"]:m2["start"]])))
+    return ments, prs
 
 
 def pages_to_mention_pairs(
@@ -451,116 +452,35 @@ def pages_to_mention_pairs(
     Same semantics as tag_sentences→mentions_table→sentence_local_triples
     (asserted equivalent in tests).
     """
-    from .spans import extract_spans
-
-    spark = pages.sparkSession
-    tags = iobes_tags(entity_types)
-    tag_ids = {t: i for i, t in enumerate(tags)}
-    payload: dict = {
-        "mode": mode, "tag_ids": tag_ids, "tags": tags,
-        "transitions": grammar_transitions(entity_types),
-    }
-    if mode == "gazetteer":
-        if aliases is None:
-            raise ValueError("gazetteer mode needs aliases")
-        payload["surface_index"] = build_surface_index(aliases)
-        payload["dp_free"] = dp_free
-    elif mode == "neural":
-        if weights is None or vocab is None or char_vocab is None:
-            raise ValueError("neural mode needs weights + vocabs")
-        payload.update(
-            weights=weights, vocab=vocab, chars=char_vocab,
-            unk=vocab.get("<UNK>", 0),
-            decode_trans=_decode_transitions(
-                weights, grammar_prior, payload["transitions"]))
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-    bc = spark.sparkContext.broadcast(payload)
+    bc = pages.sparkSession.sparkContext.broadcast(_tagger_payload(
+        mode, entity_types, aliases, weights, vocab, char_vocab,
+        grammar_prior))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
-        tlist, trans = v["tags"], v["transitions"]
-        # task-lifetime template memo: decode → BIOES spans → in-sentence
-        # pair generation is a pure function of the token sequence, and
-        # corpora repeat sentences heavily (boilerplate; the synthetic
-        # corpus is ~15% unique) — repeats replay the cached (mentions,
-        # pairs) template under their own (url, sent_id). Bounded;
-        # recomputed from the input every run, nothing survives the task.
+
+        # memoized per distinct sentence: a repeat replays the cached
+        # (mentions, pairs) template under its own (url, sent_id)
+        def templates(keys: list[tuple]) -> list[tuple]:
+            return [_sentence_template(toks, tags) for toks, tags
+                    in zip(keys, _decode_tags(v, keys, dp_free))]
+
         memo: dict[tuple, tuple] = {}
         for pdf in batches:
-            urls, sids, tok_lists = [], [], []
+            urls, sids, keys = [], [], []
             for url, text in zip(pdf["url"], pdf["text"]):
-                # tokenization contract = JVM \s+ ([ \t\n\x0B\f\r]). On
-                # plain-ASCII text str.split() is identical and ~3×
-                # faster (the hot path) — EXCEPT the ASCII separators
-                # \x1c-\x1f, which str.split() treats as whitespace and
-                # Java \s does not, so those pages (and non-ASCII ones,
-                # U+00A0 etc.) take the pinned ASCII-class regex.
-                fast = text.isascii() and _FS_SEPS.search(text) is None
-                for sent_id, line in enumerate(text.split("\n")):
-                    toks = line.split() if fast else py_tokenize_ws(line)
-                    if toks:
-                        urls.append(url)
-                        sids.append(sent_id)
-                        tok_lists.append(toks)
-            B = len(tok_lists)
-            if B == 0:
+                for sent_id, toks in page_sentences(text):
+                    urls.append(url)
+                    sids.append(sent_id)
+                    keys.append(tuple(toks))
+            if not keys:
                 continue
-            keys = [tuple(t) for t in tok_lists]
-            todo: dict[tuple, list] = {}
-            for k, toks in zip(keys, tok_lists):
-                if k not in memo and k not in todo:
-                    todo[k] = toks
-            local: dict[tuple, tuple] = {}   # overflow when memo is full
-            if todo:
-                uniq = list(todo.values())
-                if v["mode"] == "gazetteer":
-                    # exact DP-free decode (see gazetteer_decode:
-                    # candidate optimality + tie-break proof, grammar-
-                    # checked with a real-Viterbi fallback); the unfused
-                    # path keeps full Viterbi so the equivalence tests
-                    # differentially verify this shortcut
-                    decode = (gazetteer_decode if v["dp_free"]
-                              else gazetteer_viterbi)
-                    paths = decode(
-                        uniq, v["surface_index"], v["tag_ids"], trans)
-                else:
-                    w: TaggerWeights = v["weights"]
-                    feats = [featurize_sentence(t, v["vocab"], v["chars"],
-                                                v["unk"]) for t in uniq]
-                    em, lens_u = neural_emissions(
-                        w, [f[0] for f in feats], [f[1] for f in feats],
-                        [f[2] for f in feats])
-                    paths = viterbi_decode(em, lens_u, v["decode_trans"])
-                for (k, toks), p in zip(todo.items(), paths):
-                    spans = extract_spans([tlist[i] for i in p], toks)
-                    ments = [(mid, s["start"], s["end"], s["tag_type"],
-                              s["surface"]) for mid, s in enumerate(spans)]
-                    prs = []
-                    for i, m1 in enumerate(spans):
-                        for j in range(i + 1, len(spans)):
-                            m2 = spans[j]
-                            if m1["end"] > m2["start"]:
-                                continue
-                            prs.append((
-                                i, j, m2["start"] - m1["end"],
-                                m1["tag_type"], m2["tag_type"],
-                                m1["surface"], m2["surface"],
-                                " ".join(toks[m1["end"]:m2["start"]])))
-                    tpl = (ments, prs)
-                    if len(memo) < 1_000_000:
-                        memo[k] = tpl
-                    else:
-                        local[k] = tpl
             out = {k: [] for k in ("url", "sent_id", "kind", "a", "b", "c",
                                    "type_a", "type_b", "surf_a", "surf_b",
                                    "between")}
             app = {k: out[k].append for k in out}
-            for url, sid, k in zip(urls, sids, keys):
-                tpl = memo.get(k)
-                if tpl is None:
-                    tpl = local[k]
-                ments, prs = tpl
+            for url, sid, (ments, prs) in zip(
+                    urls, sids, _memoized(memo, keys, templates)):
                 for mid, st, en, tt, surf in ments:
                     app["url"](url); app["sent_id"](sid); app["kind"](0)
                     app["a"](mid); app["b"](st); app["c"](en)
@@ -620,17 +540,13 @@ def fused_triples(
             lexicon_lookup(F.col("between"), predicate_lexicon).alias("pred"),
         )
     )
-    out_cols = [
-        "url", "sent_id", "subj_surface", "subj_type", "pred",
-        "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
-    ]
-    result = pairs.filter(F.col("pred").isNotNull()).select(*out_cols)
+    result = pairs.filter(F.col("pred").isNotNull()).select(*TRIPLE_COLS)
     if cooccurrence_window is not None:
         coocc = (
             pairs.filter(F.col("pred").isNull()
                          & (F.col("gap") <= cooccurrence_window))
             .withColumn("pred", F.lit("cooccurs_with"))
-            .select(*out_cols)
+            .select(*TRIPLE_COLS)
         )
         result = result.unionByName(coocc)
     return result

@@ -5,8 +5,9 @@ tags through a dependency parse (/root/reference/dependency_paraphraser/
 udpipe.py:63-102) — no parser ships in this environment, so the primary
 extractor is the pattern/co-occurrence path SURVEY §7 Phase 3 specifies:
 
-* mention pairs within a sentence (self-join on (url, sent_id), ordered,
-  non-overlapping) — entirely JVM-side;
+* mention pairs within a sentence (ordered, non-overlapping), generated
+  inside each tagged row by a double ``posexplode`` of its spans
+  (:func:`sentence_local_triples`) — no join, entirely JVM-side;
 * predicate = the token run BETWEEN the two mentions, looked up in the
   predicate lexicon as a literal map (:func:`lexicon_lookup`);
 * **verb-arc layer** (:func:`verb_arc_triples`) — a deterministic
@@ -15,19 +16,29 @@ extractor is the pattern/co-occurrence path SURVEY §7 Phase 3 specifies:
   to its NEAREST following mention (object), so predicates survive
   modifiers/appositives that break the exact between-phrase match
   (udpipe.py:63-102 arc semantics, parser-free). Layered behind the
-  pattern path: arcs only for pairs the between-join did not claim.
+  pattern path: arcs only for pairs the between-phrase match did not
+  claim.
 * optional co-occurrence fallback (``cooccurs_with``) for pairs within
   ``window`` tokens that match no pattern.
 
-At 100 TB the self-join is per-sentence (key = (url, sent_id)) so it
-shuffles both sides on the same key once; mentions-per-sentence is tiny,
-so no pair explosion. The lexicon is a plan literal, so it costs no join.
+A sentence's mention pairs never leave its row, so pair generation
+needs no shuffle at any scale; the lexicon is a plan literal, so it
+costs no join either.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .spans import extract_spans_udf
+
+# column order of every triple table (staged, fused and arc layers)
+TRIPLE_COLS = [
+    "url", "sent_id", "subj_surface", "subj_type", "pred",
+    "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
+]
+_PAIR_KEYS = ["url", "sent_id", "subj_mention_id", "obj_mention_id"]
 
 
 def lexicon_lookup(key: Column, lexicon: dict[str, str]) -> Column:
@@ -57,8 +68,6 @@ def sentence_local_triples(
     and the predicate is a lexicon lookup. The physical plan is scan →
     UDF → explode → explode → filter → project — no join, zero exchanges.
     """
-    from .spans import extract_spans_udf
-
     sp = tagged.withColumn(
         "spans", extract_spans_udf(F.col("pred_tags"), F.col("tokens")))
     pairs = (
@@ -80,37 +89,40 @@ def sentence_local_triples(
                         F.col("m2.start") - F.col("m1.end")), " ").alias("between"),
         )
     )
-    out_cols = [
-        "url", "sent_id", "subj_surface", "subj_type", "pred",
-        "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
-    ]
     result = (pairs.withColumn("pred", lexicon_lookup(F.col("between"),
                                                       predicate_lexicon))
-              .filter(F.col("pred").isNotNull()).select(*out_cols))
+              .filter(F.col("pred").isNotNull()).select(*TRIPLE_COLS))
     if verb_lexicon:
-        result = _layer_verb_arcs(result, tagged, verb_lexicon, out_cols)
+        # arc triples only for pairs the pattern path did not claim
+        arcs = verb_arc_triples(tagged, verb_lexicon).join(
+            result.select(*_PAIR_KEYS), on=_PAIR_KEYS, how="left_anti")
+        result = result.unionByName(arcs.select(*TRIPLE_COLS))
     if cooccurrence_window is not None:
+        # cooccurs_with rows for in-window pairs NO layer claimed
+        # (pattern AND verb-arc), so one relation never yields a
+        # duplicate co-occurrence edge
         result = result.unionByName(
-            _cooccurrence_fallback(pairs, result, cooccurrence_window,
-                                   out_cols))
+            pairs.join(result.select(*_PAIR_KEYS), on=_PAIR_KEYS,
+                       how="left_anti")
+            .filter(F.col("gap_end") - F.col("gap_start")
+                    <= cooccurrence_window)
+            .withColumn("pred", F.lit("cooccurs_with"))
+            .select(*TRIPLE_COLS))
     return result
 
 
-_PAIR_KEYS = ["url", "sent_id", "subj_mention_id", "obj_mention_id"]
-
-
-def _cooccurrence_fallback(pairs: DataFrame, claimed: DataFrame,
-                           window: int, out_cols: list[str]) -> DataFrame:
-    """cooccurs_with rows for in-window pairs NO other layer claimed —
-    anti-join on the pair keys against everything already emitted
-    (pattern AND verb-arc), not just the pattern lexicon, so one
-    relation never yields a duplicate co-occurrence edge."""
-    return (
-        pairs.join(claimed.select(*_PAIR_KEYS), on=_PAIR_KEYS, how="left_anti")
-        .filter(F.col("gap_end") - F.col("gap_start") <= window)
-        .withColumn("pred", F.lit("cooccurs_with"))
-        .select(*out_cols)
-    )
+def _indexed_spans() -> Column:
+    """The row's BIOES spans (from ``pred_tags``/``tokens``), each
+    carrying its position as ``mention_id`` — the id
+    :func:`~.spans.mentions_table` gives the same span."""
+    # NOTE: field aliases on HOF lambda variables don't stick (Spark
+    # names them y_N), so the struct is cast to an explicit schema
+    return F.transform(
+        extract_spans_udf(F.col("pred_tags"), F.col("tokens")),
+        lambda m, i: F.struct(
+            i, m["start"], m["end"], m["tag_type"], m["surface"],
+        ).cast("struct<mention_id:int,start:int,end:int,"
+               "tag_type:string,surface:string>"))
 
 
 def verb_arc_triples(tagged: DataFrame,
@@ -129,18 +141,8 @@ def verb_arc_triples(tagged: DataFrame,
 
     ``verb_lexicon``: verb token → predicate name.
     """
-    from .spans import extract_spans_udf
-
-    # NOTE: field aliases on HOF lambda variables don't stick (Spark
-    # names them y_N), so the struct is cast to an explicit schema
-    spans_i = F.transform(
-        extract_spans_udf(F.col("pred_tags"), F.col("tokens")),
-        lambda m, i: F.struct(
-            i, m["start"], m["end"], m["tag_type"], m["surface"],
-        ).cast("struct<mention_id:int,start:int,end:int,"
-               "tag_type:string,surface:string>"))
     verbs = (
-        tagged.select("url", "sent_id", spans_i.alias("spans"),
+        tagged.select("url", "sent_id", _indexed_spans().alias("spans"),
                       F.posexplode("tokens").alias("pos", "verb"))
         .withColumn("pred", lexicon_lookup(F.col("verb"), verb_lexicon))
         .filter(F.col("pred").isNotNull())
@@ -221,18 +223,9 @@ def parsed_arc_triples(parsed: DataFrame,
 
     Still entirely row-local HOFs; the plan shape is unchanged.
     """
-    from .spans import extract_spans_udf
-
-    spans_i = F.transform(
-        extract_spans_udf(F.col("pred_tags"), F.col("tokens")),
-        lambda m, i: F.struct(
-            i, m["start"], m["end"], m["tag_type"], m["surface"],
-        ).cast("struct<mention_id:int,start:int,end:int,"
-               "tag_type:string,surface:string>"))
-
     verbs = (
         parsed.select(
-            "url", "sent_id", "tokens", spans_i.alias("spans"),
+            "url", "sent_id", "tokens", _indexed_spans().alias("spans"),
             F.col(arcs_col).alias("arcs"),
             F.posexplode(arcs_col).alias("apos", "arc"))
         .filter(F.col("arc.upos") == "VERB")
@@ -300,96 +293,6 @@ def parsed_arc_triples(parsed: DataFrame,
         .dropDuplicates(["url", "sent_id", "subj_mention_id",
                          "obj_mention_id", "pred"])
     )
-
-
-def _layer_verb_arcs(result: DataFrame, tagged: DataFrame,
-                     verb_lexicon: dict[str, str],
-                     out_cols: list[str]) -> DataFrame:
-    """Union arc triples for pairs the pattern path did not claim."""
-    keys = ["url", "sent_id", "subj_mention_id", "obj_mention_id"]
-    arcs = (
-        verb_arc_triples(tagged, verb_lexicon)
-        .join(result.select(*keys), on=keys, how="left_anti")
-        .select(*out_cols)
-    )
-    return result.unionByName(arcs)
-
-
-def mention_pairs(mentions: DataFrame, tagged: DataFrame) -> DataFrame:
-    """Ordered in-sentence mention pairs with the between-token phrase.
-
-    ``tagged`` supplies the tokens array (url, sent_id, tokens).
-    """
-    m1 = mentions.alias("m1")
-    m2 = mentions.alias("m2")
-    pairs = (
-        m1.join(m2, on=[
-            F.col("m1.url") == F.col("m2.url"),
-            F.col("m1.sent_id") == F.col("m2.sent_id"),
-            F.col("m1.end") <= F.col("m2.start"),
-        ])
-        .select(
-            F.col("m1.url").alias("url"),
-            F.col("m1.sent_id").alias("sent_id"),
-            F.col("m1.mention_id").alias("subj_mention_id"),
-            F.col("m2.mention_id").alias("obj_mention_id"),
-            F.col("m1.surface").alias("subj_surface"),
-            F.col("m1.tag_type").alias("subj_type"),
-            F.col("m2.surface").alias("obj_surface"),
-            F.col("m2.tag_type").alias("obj_type"),
-            F.col("m1.end").alias("gap_start"),
-            F.col("m2.start").alias("gap_end"),
-        )
-    )
-    toks = tagged.select("url", "sent_id", "tokens")
-    return (
-        pairs.join(toks, on=["url", "sent_id"])
-        .withColumn(
-            "between",
-            F.array_join(
-                F.slice(
-                    F.col("tokens"),
-                    F.col("gap_start") + 1,          # slice() is 1-based
-                    F.col("gap_end") - F.col("gap_start"),
-                ),
-                " ",
-            ),
-        )
-        .drop("tokens")
-    )
-
-
-def extract_triples(
-    mentions: DataFrame,
-    tagged: DataFrame,
-    predicate_lexicon: dict[str, str],
-    cooccurrence_window: int | None = None,
-    verb_lexicon: dict[str, str] | None = None,
-) -> DataFrame:
-    """→ (url, sent_id, subj_surface, subj_type, pred, obj_surface,
-    obj_type, subj_mention_id, obj_mention_id).
-
-    Pattern triples via a lexicon lookup on the between-phrase; optional
-    verb-arc layer (``verb_lexicon``) for predicates the exact
-    between-match misses; optional windowed co-occurrence fallback for
-    unmatched pairs.
-    """
-    pairs = mention_pairs(mentions, tagged)
-    pattern = (pairs.withColumn("pred", lexicon_lookup(F.col("between"),
-                                                       predicate_lexicon))
-               .filter(F.col("pred").isNotNull()))
-    out_cols = [
-        "url", "sent_id", "subj_surface", "subj_type", "pred",
-        "obj_surface", "obj_type", "subj_mention_id", "obj_mention_id",
-    ]
-    result = pattern.select(*out_cols)
-    if verb_lexicon:
-        result = _layer_verb_arcs(result, tagged, verb_lexicon, out_cols)
-    if cooccurrence_window is not None:
-        result = result.unionByName(
-            _cooccurrence_fallback(pairs, result, cooccurrence_window,
-                                   out_cols))
-    return result
 
 
 def canonical_triples(triples: DataFrame, links: DataFrame) -> DataFrame:

@@ -10,8 +10,9 @@
       → [stage mentions]  salted repartition → Arrow-batched CRF tagging
                           → BIOES spans
       → [stage links]     broadcast alias-index cosine top-k → top-1
-      → [stage triples]   in-sentence pair join + broadcast predicate
-                          lexicon (+ optional co-occurrence fallback)
+      → [stage triples]   row-local in-sentence pairs + literal-map
+                          predicate lexicon (+ optional co-occurrence
+                          fallback)
       → [stage canonical] connected components over (surface ↔ canonical)
                           edges → entity_nodes + canonical edge table
 
@@ -40,9 +41,7 @@ from ..operators.spans import mentions_table
 from ..operators.tagger import (repartition_by_length, sentences_table,
                                 tag_sentences)
 from ..operators.triples import canonical_triples, sentence_local_triples
-from .staged import SnapshotStagedPlan, _partition_lineage  # noqa: F401
-# _partition_lineage re-exported: pre-round-6 callers imported it from
-# this module (it moved to .staged when CorpusPrepPipeline joined)
+from .staged import SnapshotStagedPlan
 
 
 def salted_repartition(df: DataFrame, key: str = "url", salt: int = 64,

@@ -46,9 +46,9 @@ def triples_stream(pages: DataFrame, aliases: list[dict],
                    cooccurrence_window: int | None = None) -> DataFrame:
     """Streaming KG construction: the FUSED single-crossing hot path
     (sentence split + gazetteer match + Viterbi + spans + pair gen in one
-    mapInPandas) lifted onto the stream, then the broadcast predicate-
-    lexicon join — all stateless / broadcast, so the micro-batch plan is
-    the batch plan verbatim (stream==batch tested)."""
+    mapInPandas) lifted onto the stream, then the predicate lookup on
+    the between-phrase (a literal map, no join) — all stateless, so the
+    micro-batch plan is the batch plan verbatim (stream==batch tested)."""
     from ..operators.tagger import fused_triples, pages_to_mention_pairs
 
     fused = pages_to_mention_pairs(pages, aliases)
@@ -74,7 +74,8 @@ def windowed_mention_counts(
                                    TimestampType)
 
     from ..operators.spans import extract_spans
-    from ..operators.tagger import (build_surface_index, gazetteer_tag_ids)
+    from ..operators.tagger import (build_surface_index, gazetteer_tag_ids,
+                                    page_sentences)
     from ..operators.tagset import iobes_tags, tag_to_id
 
     spark = pages.sparkSession
@@ -93,10 +94,7 @@ def windowed_mention_counts(
         for pdf in batches:
             ts_out, tt_out = [], []
             for ts, text in zip(pdf["warc_ts"], pdf["text"]):
-                for line in text.split("\n"):
-                    toks = line.split()
-                    if not toks:
-                        continue
+                for _, toks in page_sentences(text):
                     gold = gazetteer_tag_ids(toks, sidx, tids)
                     for s in extract_spans([tlist[i] for i in gold]):
                         ts_out.append(ts)

@@ -29,8 +29,8 @@ def test_stream_matches_batch(spark, tmp_path):
 
 
 def test_triples_stream_matches_batch(spark, tmp_path):
-    """Streaming KG construction (fused path on readStream + broadcast
-    lexicon join) produces exactly the batch triples."""
+    """Streaming KG construction (fused path on readStream + predicate
+    lookup) produces exactly the batch triples."""
     from ner_pytorch_spark.operators.tagger import fused_triples, pages_to_mention_pairs
     from ner_pytorch_spark.streaming.pages_stream import triples_stream
 
@@ -78,3 +78,37 @@ def test_windowed_mention_counts(spark, tmp_path):
     batch_mentions = mentions_table(tag_sentences(
         sentences_table(pages), mode="gazetteer", aliases=aliases)).count()
     assert got == batch_mentions
+
+
+def test_windowed_mention_counts_match_batch_tokenization(spark):
+    """The windowed counter tokenizes like sentences_table (JVM \\s+):
+    U+00A0 and the ASCII separators \\x1c-\\x1f are NOT whitespace, so
+    'Alice\\u00a0Johnson' and 'Garcia\\x1cRossi' are one unmatched token
+    each on both paths."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from ner_pytorch_spark.streaming.pages_stream import (
+        windowed_mention_counts)
+
+    ts = datetime.datetime(2024, 1, 1, 12)
+    pages = spark.createDataFrame(
+        [("https://ex.org/a", ts, bytearray(b""),
+          "Alice\u00a0Johnson met Robert Smith in Paris .\nAcme Corp hired"
+          " Wonka\u00a0Foods staff .", "en"),
+         ("https://ex.org/b", ts, bytearray(b""),
+          "Garcia\x1cRossi praised Chen Wei .\nHooli\x1fGlobex left Oslo .",
+          "en")],
+        "url string, warc_ts timestamp, html binary, text string, "
+        "lang string")
+    aliases = datagen.alias_rows()
+
+    got = {r.tag_type: r.n for r in windowed_mention_counts(
+        pages, aliases, window="1 day")
+        .groupBy("tag_type").agg(F.sum("n_mentions").alias("n")).collect()}
+    want = {r.tag_type: r.n for r in mentions_table(tag_sentences(
+        sentences_table(pages), mode="gazetteer", aliases=aliases))
+        .groupBy("tag_type").agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert got == want
+    assert want == {"PER": 2, "LOC": 2, "ORG": 1}

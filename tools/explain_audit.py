@@ -11,6 +11,9 @@ Checks (printed + asserted):
     bucketing via one Arrow stage, candidate join on (table, bucket)
   * verb_arc_triples: zero exchanges (HOF resolution inside the row,
     verb lexicon a literal-map lookup, no join)
+  * kg_triples_pattern (sentence_local_triples): no join and no
+    exchange past the input fan-out — pairs are exploded inside the
+    tagged row, the predicate lexicon is a literal-map lookup
   * simhash_pairs: candidate pairs from a chunk equi-join, never a
     cartesian product
 """
@@ -114,6 +117,17 @@ def main():
     ok &= check("verb_arc_zero_exchange", plan,
                 must=[r"element_at\(map\("],
                 must_not=[r"Exchange hashpartitioning", r"Join"])
+
+    # staged pattern path (the oracle-checked production triples): pairs
+    # are generated inside each tagged row — no join, and no exchange
+    # but the input's round-robin fan-out (_read spreads the one-file
+    # documents table over the cores before the tagger)
+    plan = plan_of(e.q_kg_triples_pattern(spark, SF))
+    ok &= check("sentence_local_no_join", plan,
+                must=[r"element_at\(map\("],
+                must_not=[r"Join", r"BroadcastExchange",
+                          r"\(\d+\) Exchange\nInput[^\n]*\n"
+                          r"Arguments: (?!RoundRobinPartitioning)"])
 
     sh = e.q_simhash_pairs(spark, SF)
     plan = plan_of(sh)
